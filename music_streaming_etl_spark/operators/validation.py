@@ -5,17 +5,21 @@ The reference runs validation as two dedicated DAG tasks
 aggregates pushed to Postgres (``:65-80``) and pandas checks on the
 extracted frames (``:124-169, 214-242``), raising on violation.
 
-Here each check is a *single aggregation action* on the DataFrame —
-one distributed pass, no collect of data rows, only the 1-row report
-crosses to the driver. ``validate()`` composes any number of checks
-into ONE jobs-worth of aggregates so a full validation suite costs a
-single scan even on 100 TB inputs.
+Here a check is a set of aggregate columns plus a verdict over their
+values — no collect of data rows, only a 1-row report crosses to the
+driver. ``check_nonempty``, ``check_no_nulls`` and ``check_range``
+return *pending* results: ``validate()`` groups them by DataFrame and
+evaluates each frame's checks in ONE ``agg(...).collect()``, so a
+suite of any size costs one scan per frame even on 100 TB inputs. A
+pending result read on its own (``check_nonempty(df).passed``)
+resolves by itself with one aggregate. The remaining checks (types,
+referential, freshness, uniqueness, record count) run their action
+when called.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
-from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -28,17 +32,73 @@ class ValidationError(ValueError):
     reference's ``raise ValueError`` at :141-148,153-162,221-242)."""
 
 
-@dataclass
 class CheckResult:
-    name: str
-    passed: bool
-    details: dict = field(default_factory=dict)
+    """One check's ``name``, ``passed`` and ``details``.
+
+    A pending result holds the frame it checks, its aggregate columns
+    and ``verdict(values) -> (passed, details)`` over their values; it
+    resolves on the first read of ``passed``/``details`` unless
+    ``validate()`` resolved it first, together with every other
+    pending check on the same frame."""
+
+    def __init__(
+        self,
+        name: str,
+        passed: bool | None = None,
+        details: dict | None = None,
+        *,
+        df: DataFrame | None = None,
+        aggs: Sequence[Column] = (),
+        verdict=None,
+    ):
+        self.name = name
+        self._passed = passed
+        self._details = {} if details is None else details
+        self._pending = (df, list(aggs), verdict) if verdict is not None else None
+
+    @property
+    def passed(self) -> bool:
+        _resolve([self])
+        return self._passed
+
+    @property
+    def details(self) -> dict:
+        _resolve([self])
+        return self._details
+
+    def __repr__(self) -> str:
+        # never resolves: a repr must not launch a Spark job
+        if self._pending is not None:
+            return f"CheckResult({self.name!r}, pending)"
+        return f"CheckResult({self.name!r}, {self._passed!r}, {self._details!r})"
+
+
+def _resolve(results: Sequence[CheckResult]) -> None:
+    """Resolve the pending results: one aggregate per distinct frame."""
+    frames: dict[int, list[CheckResult]] = {}
+    for r in results:
+        if r._pending is not None:
+            frames.setdefault(id(r._pending[0]), []).append(r)
+    for group in frames.values():
+        # values are read by position, so the columns need no aliases
+        cols = [c for r in group for c in r._pending[1]]
+        row = group[0]._pending[0].agg(*cols).collect()[0]
+        i = 0
+        for r in group:
+            _, aggs, verdict = r._pending
+            r._passed, r._details = verdict(row[i : i + len(aggs)])
+            r._pending = None
+            i += len(aggs)
 
 
 def check_nonempty(df: DataFrame, name: str = "nonempty") -> CheckResult:
     """V1 — fail on zero rows (ref :152-154; SQL form :65-72)."""
-    n = df.count()
-    return CheckResult(name, n > 0, {"total_rows": n})
+    return CheckResult(
+        name,
+        df=df,
+        aggs=[F.count(F.lit(1))],
+        verdict=lambda v: (v[0] > 0, {"total_rows": v[0]}),
+    )
 
 
 def check_no_nulls(
@@ -47,19 +107,29 @@ def check_no_nulls(
     """V2 — all listed columns must be fully non-null, in ONE pass
     (the reference's per-column ``COUNT(CASE WHEN col IS NULL…)``,
     ref :65-80 / ``isnull().sum()`` :156-162)."""
-    row = df.agg(
-        *[F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in cols]
-    ).collect()[0]
-    nulls = {c: row[c] for c in cols if row[c] > 0}
-    return CheckResult(name, not nulls, {"null_counts": nulls})
+
+    def verdict(v):
+        nulls = {c: n for c, n in zip(cols, v) if n > 0}
+        return not nulls, {"null_counts": nulls}
+
+    return CheckResult(
+        name,
+        df=df,
+        aggs=[F.count(F.when(F.col(c).isNull(), 1)) for c in cols],
+        verdict=verdict,
+    )
 
 
 def check_range(
     df: DataFrame, col: str, lo, hi, name: str = "range"
 ) -> CheckResult:
     """V3 — every non-null value within [lo, hi] (ref :231-232)."""
-    bad = df.filter(~F.col(col).between(lo, hi)).count()
-    return CheckResult(name, bad == 0, {"out_of_range": bad})
+    return CheckResult(
+        name,
+        df=df,
+        aggs=[F.count(F.when(~F.col(col).between(lo, hi), 1))],
+        verdict=lambda v: (v[0] == 0, {"out_of_range": v[0]}),
+    )
 
 
 _INTEGRAL_GATE = r"^\s*[+-]?[0-9]+\s*$"
@@ -285,7 +355,9 @@ def quarantine_split(
 def validate(results: Sequence[CheckResult], raise_on_fail: bool = True) -> bool:
     """Combine check results; raise ValidationError listing every
     failure (the reference fails the task on first violation — we
-    report all of them at once)."""
+    report all of them at once). Pending results are resolved first,
+    one aggregate per frame."""
+    _resolve(results)
     failures = [r for r in results if not r.passed]
     if failures and raise_on_fail:
         msg = "; ".join(f"{r.name}: {r.details}" for r in failures)
@@ -303,7 +375,8 @@ def observed_quality_metrics(
     the frame's next action — write it, stream it, aggregate it — and
     the metrics materialize as a side effect of that one job. At
     100 TB this is the difference between validating for free and
-    paying a second full scan (every check_* above is its own action).
+    paying a second full scan (every check_* above costs a scan of
+    its own, even when ``validate()`` fuses a frame's checks into one).
 
     Returns ``(observed_df, observation)``; read
     ``observation.get`` AFTER an action has run on ``observed_df``.

@@ -6,7 +6,7 @@ group-by aggregations, writing two CSVs. Here the whole thing is a
 single Catalyst-planned DAG:
 
     streams ⟕ broadcast(songs) ⟕ broadcast(users)   (shared, cached)
-        ├─ genre branch : filter genre NOT NULL → groupBy(genre, date)
+        ├─ genre branch : filter genre NOT NULL → fused agg+mode per (genre, date)
         └─ hourly branch: groupBy(hour)
 
 Semantics matched bit-for-bit to pandas (SURVEY.md §2.4):
@@ -18,11 +18,13 @@ Semantics matched bit-for-bit to pandas (SURVEY.md §2.4):
   (pandas leaves it engine-internal — documented divergence).
 
 Scale: the joined intermediate is consumed by both branches — cache()
-avoids recomputing the joins. Both dims broadcast (no fact shuffle);
-each branch shuffles once on its (low-cardinality) group key, with
-partial aggregation map-side. At 100 TB the only state that grows is
-the distinct-count in the hourly branch — swap ``exact_distinct=False``
-to use HLL.
+avoids recomputing the joins. Both dims broadcast (no fact shuffle).
+The genre branch is one wide shuffle on (genre, date, track_name)
+with partial aggregation map-side, then a tiny one on (genre, date)
+that re-combines the partials and picks the mode — no window, no
+self-join. The hourly branch shuffles on its (low-cardinality) hour
+key. At 100 TB the only state that grows is the distinct-count in the
+hourly branch — swap ``exact_distinct=False`` to use HLL.
 """
 
 from __future__ import annotations
@@ -34,8 +36,8 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import derive_date, derive_hour
 from ..operators.aggregates import (
-    agg_mode,
     agg_topk_by_freq,
+    agg_with_mode_fused,
     drop_null_group_keys,
 )
 from ..operators.joins import left_join_equi
@@ -67,17 +69,30 @@ def enrich_streams(
 
 
 def genre_kpis(merged: DataFrame) -> DataFrame:
-    """Per-(track_genre, date) KPIs (ref :182-195)."""
+    """Per-(track_genre, date) KPIs (ref :182-195), as one fused
+    aggregate: partial counts and sums per (genre, date, track_name),
+    re-combined per (genre, date) together with the mode."""
     base = drop_null_group_keys(
         merged.withColumn("date", derive_date("listen_time")), ["track_genre"]
     )
-    keys = ["track_genre", "date"]
-    agg = base.groupBy(*keys).agg(
-        F.count("track_id").alias("listen_count"),
-        F.avg("duration_ms").alias("avg_track_duration"),
-    )
-    mode = agg_mode(base, keys, "track_name", "most_popular_track")
-    return agg.join(mode, keys, "left").select(
+    return agg_with_mode_fused(
+        base,
+        ["track_genre", "date"],
+        "track_name",
+        partials=[
+            F.count("track_id").alias("__cnt_track"),
+            F.sum("duration_ms").alias("__sum_dur"),
+            F.count("duration_ms").alias("__cnt_dur"),
+        ],
+        finals=[
+            F.sum("__cnt_track").alias("listen_count"),
+            (
+                F.sum("__sum_dur").cast("double")
+                / F.sum("__cnt_dur").cast("double")
+            ).alias("avg_track_duration"),
+        ],
+        mode_alias="most_popular_track",
+    ).select(
         "track_genre",
         "date",
         "listen_count",
